@@ -1,8 +1,9 @@
 package graft.kg
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.kg.Model._
@@ -11,10 +12,17 @@ import graft.kg.Model._
   * `KGraph` / `ExtKGraph`) over materialized triples.
   *
   * The reference loads one YAML graph per policy and walks it with networkx.
-  * Here every per-document graph is tiny (SURVEY.md §7), so each query runs
-  * one `groupByKey(url)` pass that computes reachability in memory and emits
-  * plain rows — the per-document closure-at-materialize-time design (G8):
-  * corpus-level questions then stay joins/aggregations for Catalyst.
+  * Here every per-document graph is tiny (SURVEY.md §7), so each query
+  * builds a document's graph in memory and emits plain rows — the
+  * per-document closure-at-materialize-time design (G8): corpus-level
+  * questions then stay joins/aggregations for Catalyst.
+  *
+  * Every query plans one shuffle and evaluates each document once
+  * (`perDocument`): a sorted result range-partitions on url, so its single
+  * exchange both groups the documents and orders the output (url leads every
+  * sort key); sorting after a hash grouping would add a second exchange whose
+  * range sampling re-runs each document's graph. Unsorted passes
+  * (`closureRows`, `partyTuples`) hash-group and skip the range-bound scan.
   *
   * Graph orientation matches the reference loader (graph_utils.py:170-186):
   * COLLECT-family edges actor→data; DATA SUBSUM parent→child; ACTOR SUBSUM
@@ -55,7 +63,6 @@ object KgApi {
 
     def nodes: Vector[String] = nodeType.keys.toVector
     def dataNodes: Vector[String] = nodes.filter(nodeType(_) == "DATA")
-    def actorNodes: Vector[String] = nodes.filter(nodeType(_) == "ACTOR")
 
     /** All nodes reachable from `n` along oriented positive edges. */
     def reachable(n: String): Set[String] = reach(n, adj)
@@ -217,6 +224,38 @@ object KgApi {
 
   // ------------------------------------------------------- Spark query layer
 
+  /** Runs `perDoc` once per document, naming its tuple fields `cols` (url
+    * first). `sortKeys > 0` orders the result globally by its first
+    * `sortKeys` columns behind one range exchange on url; 0 hash-groups.
+    * The range exchange fixes its partition count: graph work is heavy for
+    * its few shuffled bytes, and adaptive coalescing would put it in one task. */
+  private def perDocument[T <: Product : TypeTag](triples: Dataset[Triple],
+      cols: Seq[String], sortKeys: Int)(
+      perDoc: (String, Vector[Triple]) => Iterator[T]): DataFrame = {
+    require(cols.headOption.contains("url"), s"url must lead $cols")
+    implicit val rowEnc: Encoder[T] = Encoders.product[T]
+    if (sortKeys == 0)
+      triples.groupByKey(_.url)(Encoders.STRING)
+        .flatMapGroups((url, it) => perDoc(url, it.toVector)).toDF(cols: _*)
+    else
+      triples.repartitionByRange(
+          triples.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("url"))
+        .sortWithinPartitions("url")
+        .mapPartitions(urlRuns(_).flatMap(perDoc.tupled)).toDF(cols: _*)
+        .sortWithinPartitions(cols.take(sortKeys).map(col): _*)
+  }
+
+  /** Adjacent same-url runs of a url-sorted partition. */
+  private def urlRuns(it: Iterator[Triple]): Iterator[(String, Vector[Triple])] = {
+    val in = it.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).map { in =>
+      val url = in.head.url
+      val run = Vector.newBuilder[Triple]
+      while (in.hasNext && in.head.url == url) run += in.next()
+      (url, run.result())
+    }
+  }
+
   /** G8 closure-at-materialize-time: per-document transitive closure of the
     * positive oriented graph as plain rows — one row per (ancestor, node)
     * reachability pair, with node types attached. Computed ONCE when the
@@ -226,16 +265,14 @@ object KgApi {
     * re-run. Rows are unique per (url, anc, node) by construction. At 10^12
     * docs the closure is ~|nodes|·|reachable| per doc (tiny per-doc graphs),
     * i.e. linear in the corpus. */
-  def closureRows(triples: Dataset[Triple]): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
+  def closureRows(triples: Dataset[Triple]): DataFrame =
+    perDocument(triples, Seq("url", "anc", "anc_type", "node", "node_type"), 0) { (url, ts) =>
+      val g = new PolicyGraph(ts)
       g.nodes.iterator.flatMap { n =>
         g.reachable(n).iterator.map(m =>
           (url, n, g.nodeType(n), m, g.nodeType(m)))
       }
-    }.toDF("url", "anc", "anc_type", "node", "node_type")
-  }
+    }
 
   /** KGraph.who_collect over materialized closure rows: a pure filter
     * (ACTOR ancestors of the DATA node). */
@@ -246,12 +283,14 @@ object KgApi {
       .orderBy("url", "actor")
 
   /** KGraph.validate_collection over closure rows: datatypes from the probe
-    * list somebody collects (graph_utils.py:333-339). */
+    * list somebody collects (graph_utils.py:333-339). One range exchange
+    * serves both the `distinct` and the order. */
   def validateCollectionFromClosure(closure: DataFrame, dts: Seq[String]): DataFrame =
     closure.filter(col("node").isin(dts: _*) && col("node_type") === "DATA" &&
         col("anc_type") === "ACTOR")
       .select(col("url"), col("node").as("datatype"))
-      .distinct().orderBy("url", "datatype")
+      .repartitionByRange(col("url"), col("datatype"))
+      .distinct().sortWithinPartitions("url", "datatype")
 
   /** KGraph.validate_sharing over closure rows: probe (entity, datatype)
     * pairs where the entity is among the datatype's collectors. */
@@ -265,77 +304,42 @@ object KgApi {
   }
 
   /** KGraph.who_collect as a corpus query: (url, actor) pairs. */
-  def whoCollect(triples: Dataset[Triple], datatype: String): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      new PolicyGraph(it.toVector).whoCollect(datatype).iterator.map((url, _))
-    }.toDF("url", "actor").orderBy("url", "actor")
-  }
+  def whoCollect(triples: Dataset[Triple], datatype: String): DataFrame =
+    perDocument(triples, Seq("url", "actor"), 2) { (url, ts) =>
+      new PolicyGraph(ts).whoCollect(datatype).iterator.map((url, _))
+    }
 
   /** ExtKGraph who_collect with ontology grafting (+ optional UNSPECIFIED
     * umbrella): every (url, actor) that can collect `datatype`. */
   def extWhoCollect(triples: Dataset[Triple], datatype: String,
-      umbrella: Boolean): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      new ExtPolicyGraph(it.toVector, Set(datatype), umbrella)
+      umbrella: Boolean): DataFrame =
+    perDocument(triples, Seq("url", "actor"), 2) { (url, ts) =>
+      new ExtPolicyGraph(ts, Set(datatype), umbrella)
         .whoCollect(datatype).iterator.map((url, _))
-    }.toDF("url", "actor").orderBy("url", "actor")
-  }
+    }
 
   /** KGraph.purposes over every (actor, datatype) pair connected in the
     * positive graph: exploded purpose labels along shortest paths. */
-  def edgePurposes(triples: Dataset[Triple]): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
+  def edgePurposes(triples: Dataset[Triple]): DataFrame =
+    perDocument(triples, Seq("url", "actor", "datatype", "purpose"), 4) { (url, ts) =>
+      val g = new PolicyGraph(ts)
       for {
         dt <- g.dataNodes.sorted.iterator
         actor <- g.whoCollect(dt)
         p <- g.purposes(actor, dt)
       } yield (url, actor, dt, p)
-    }.toDF("url", "actor", "datatype", "purpose")
-      .orderBy("url", "actor", "datatype", "purpose")
-  }
+    }
 
   /** KGraph.get_text over every connected (actor, datatype) pair: the
     * evidence sentences justifying the relation, sorted and joined. */
-  def edgeTexts(triples: Dataset[Triple]): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
+  def edgeTexts(triples: Dataset[Triple]): DataFrame =
+    perDocument(triples, Seq("url", "actor", "datatype", "texts"), 3) { (url, ts) =>
+      val g = new PolicyGraph(ts)
       for {
         dt <- g.dataNodes.sorted.iterator
         actor <- g.whoCollect(dt)
       } yield (url, actor, dt, g.getText(actor, dt).mkString(" || "))
-    }.toDF("url", "actor", "datatype", "texts")
-      .orderBy("url", "actor", "datatype")
-  }
-
-  /** KGraph.validate_collection for a probe list: (url, datatype) rows where
-    * someone collects the datatype (graph_utils.py:333-339). */
-  def validateCollection(triples: Dataset[Triple], dts: Seq[String]): DataFrame = {
-    import triples.sparkSession.implicits._
-    val probe = dts.toVector
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
-      probe.iterator.filter(dt => g.whoCollect(dt).nonEmpty).map((url, _))
-    }.toDF("url", "datatype").orderBy("url", "datatype")
-  }
-
-  /** KGraph.validate_sharing for probe (entity, datatype) pairs: rows where
-    * the entity is among the datatype's collectors (graph_utils.py:341-346). */
-  def validateSharing(triples: Dataset[Triple],
-      pairs: Seq[(String, String)]): DataFrame = {
-    import triples.sparkSession.implicits._
-    val probe = pairs.toVector
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
-      probe.iterator.collect {
-        case (e, dt) if g.whoCollect(dt).contains(e) => (url, e, dt)
-      }
-    }.toDF("url", "entity", "datatype").orderBy("url", "entity", "datatype")
-  }
+    }
 
   /** Exported per-party collection tuples (export_poligraph_tuples.py:52-87):
     * who_collect over every datatype, each collector classified first-party
@@ -344,10 +348,9 @@ object KgApi {
     * normalization for e.g. "you provide X" statements) is NOT a collecting
     * party — the reference would count it as 3rd-party, which no human
     * annotation does (holdout FP source). */
-  def partyTuples(triples: Dataset[Triple]): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val g = new PolicyGraph(it.toVector)
+  def partyTuples(triples: Dataset[Triple]): DataFrame =
+    perDocument(triples, Seq("url", "party", "datatype"), 0) { (url, ts) =>
+      val g = new PolicyGraph(ts)
       val fp = g.firstParty
       (for {
         dt <- g.dataNodes
@@ -357,17 +360,15 @@ object KgApi {
         // user-to-user visibility, not operator/third-party collection)
         if actor != "you" && actor != "user"
       } yield (url, if (fp(actor)) "we" else "3rd-party", dt)).distinct.iterator
-    }.toDF("url", "party", "datatype")
-  }
+    }
 
   /** Contradiction detection with the reference's narrowing semantics
     * (analyses/contradictions/get-poligraph-contradictions.py:12-84):
     * action match, purpose overlap, PolicyLint narrow-subsum exclusion, and
     * descendant-set overlap on both the data and the entity side. */
-  def contradictions(triples: Dataset[Triple]): DataFrame = {
-    import triples.sparkSession.implicits._
-    triples.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val ts = it.toVector
+  def contradictions(triples: Dataset[Triple]): DataFrame =
+    perDocument(triples, Seq("url", "pos_subj", "pos_pred", "pos_obj",
+        "neg_subj", "neg_pred", "neg_obj"), 7) { (url, ts) =>
       val g = new PolicyGraph(ts)
       def subsumConflict(pos: String, neg: String): Boolean =
         if (pos == neg) true
@@ -387,7 +388,5 @@ object KgApi {
         if negPurp.isEmpty || (negPurp & p.purposes.keySet).nonEmpty
         if subsumConflict(p.obj, n.obj) && subsumConflict(p.subj, n.subj)
       } yield (url, p.subj, p.pred, p.obj, n.subj, n.pred, n.obj)).iterator
-    }.toDF("url", "pos_subj", "pos_pred", "pos_obj", "neg_subj", "neg_pred", "neg_obj")
-      .orderBy("url", "pos_subj", "pos_pred", "pos_obj", "neg_subj", "neg_pred", "neg_obj")
-  }
+    }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -137,7 +138,9 @@ object Similarity {
     * single narrow map — no cross join, no window, no shuffle (round-1 used
     * a crossJoin + Window sort-shuffle of n×cells rows; ADVICE fix).
     * Ties break to the lowest cell id (first maximum, matching the previous
-    * `array_position(ds, array_max(ds))` expression). */
+    * `array_position(ds, array_max(ds))` expression). Cosines compare in
+    * Spark SQL order, where NaN (a zero-norm centroid or row) ranks above
+    * every number, as it did under `array_max`. */
   def ivfAssign(emb: DataFrame, cells: Int = 16): DataFrame = {
     val cents = centroidArrays(emb, cells)
     val spark = emb.sparkSession
@@ -151,7 +154,7 @@ object Similarity {
           var i = 1
           while (i < cents.length) {
             val d = cosineJvm(cents(i)._2, arr)
-            if (d > bestD) { bestD = d; best = i }
+            if (SQLOrderingUtil.compareDoubles(d, bestD) > 0) { bestD = d; best = i }
             i += 1
           }
           (id, e, cents(best)._1)

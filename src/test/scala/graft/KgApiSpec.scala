@@ -478,4 +478,62 @@ class KgApiSpec extends AnyFunSuite {
     assert(cte.nonEmpty)
     assert(cte == closure)
   }
+
+  test("sorted calls are globally ordered and equal per-document driver graphs") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.kg.KgQueries
+    import graft.kg.Model.PositiveEdgeTypes
+    val spark = SparkTestSession.spark
+    val triples = KgQueries.sharedTriples(spark)
+    val closure = KgQueries.sharedClosure(spark)
+    val docs = triples.collect().toVector.groupBy(_.url).toVector
+    // more documents than shuffle partitions: range bounds split the urls
+    assert(docs.size > spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val graphs = docs.map { case (url, ts) => (url, new KgApi.PolicyGraph(ts)) }
+    def connected(g: KgApi.PolicyGraph) =
+      for (dt <- g.dataNodes.sorted; a <- g.whoCollect(dt)) yield (a, dt)
+    def collectors(dt: String) = for ((u, g) <- graphs; a <- g.whoCollect(dt)) yield Seq(u, a)
+    def conflicts(g: KgApi.PolicyGraph, p: String, n: String) =
+      p == n || (!g.subsum(p, n) && ((g.descendants(n) + n) & (g.descendants(p) + p)).nonEmpty)
+    // (call, result, leading sort columns, driver answer)
+    val cases = Seq(
+      ("whoCollect", KgApi.whoCollect(triples, "email address"), 2, collectors("email address")),
+      ("extWhoCollect", KgApi.extWhoCollect(triples, "phone number", umbrella = true), 2,
+        for ((u, ts) <- docs;
+             a <- new KgApi.ExtPolicyGraph(ts, Set("phone number"), true).whoCollect("phone number"))
+          yield Seq(u, a)),
+      ("edgePurposes", KgApi.edgePurposes(triples), 4,
+        for ((u, g) <- graphs; (a, dt) <- connected(g); p <- g.purposes(a, dt))
+          yield Seq(u, a, dt, p)),
+      ("edgeTexts", KgApi.edgeTexts(triples), 3,
+        for ((u, g) <- graphs; (a, dt) <- connected(g))
+          yield Seq(u, a, dt, g.getText(a, dt).mkString(" || "))),
+      ("contradictions", KgApi.contradictions(triples), 7,
+        for ((u, ts) <- docs; g = new KgApi.PolicyGraph(ts);
+             n <- ts if n.pred.startsWith("NOT_");
+             p <- ts if PositiveEdgeTypes(p.pred) && p.pred == n.pred.stripPrefix("NOT_");
+             if n.purposes.isEmpty || (n.purposes.keySet & p.purposes.keySet).nonEmpty;
+             if conflicts(g, p.obj, n.obj) && conflicts(g, p.subj, n.subj))
+          yield Seq(u, p.subj, p.pred, p.obj, n.subj, n.pred, n.obj)),
+      ("whoCollectFromClosure", KgApi.whoCollectFromClosure(closure, "email address"), 2,
+        collectors("email address")),
+      ("validateCollectionFromClosure",
+        KgApi.validateCollectionFromClosure(closure, KgQueries.ValidateDts), 2,
+        for ((u, g) <- graphs; dt <- KgQueries.ValidateDts.distinct if g.whoCollect(dt).nonEmpty)
+          yield Seq(u, dt)),
+      ("validateSharingFromClosure",
+        KgApi.validateSharingFromClosure(closure, KgQueries.ValidatePairs), 3,
+        for ((u, g) <- graphs; (e, dt) <- KgQueries.ValidatePairs.distinct
+             if g.whoCollect(dt).contains(e))
+          yield Seq(u, e, dt)))
+    // Spark orders strings by their UTF-8 bytes
+    val sqlOrder = Ordering.Implicits.seqOrdering[Seq, String](Ordering.fromLessThan(
+      (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
+    cases.foreach { case (name, df, keys, want) =>
+      val got = df.collect().toSeq.map(_.toSeq.map(_.asInstanceOf[String]))
+      assert(want.nonEmpty, s"$name: empty driver answer")
+      assert(got == got.sortBy(_.take(keys))(sqlOrder), s"$name is not sorted by $keys columns")
+      assert(got.sorted(sqlOrder) == want.sorted(sqlOrder), name)
+    }
+  }
 }

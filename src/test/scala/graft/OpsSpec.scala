@@ -56,6 +56,18 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"IVF recall $recall at nprobe=8")
   }
 
+  test("IVF assignment ranks a NaN cosine first, like array_max (zero-norm centroid)") {
+    import spark.implicits._
+    // cell 1 is a zero vector, so every row's cosine with it is NaN; Spark
+    // SQL orders NaN above every number, so the first NaN cell wins. The
+    // zero row itself scores NaN against every cell and keeps cell 0.
+    val vecs = Seq((0L, Seq(1f, 0f)), (1L, Seq(0f, 0f)), (2L, Seq(0f, 1f)),
+      (3L, Seq(1f, 1f)), (4L, Seq(-1f, 2f))).toDF("vec_id", "embedding")
+    val got = Similarity.ivfAssign(vecs, cells = 3).select("vec_id", "cell_id")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == Map(0L -> 1, 1L -> 0, 2L -> 1, 3L -> 1, 4L -> 1))
+  }
+
   test("embedding LSH buckets are bounded and planted exact dups are found") {
     // pre-cap bucket sizes: 16-bit band keys spread n rows over 2^16 keys,
     // so no bucket should come anywhere near the cap on organic data

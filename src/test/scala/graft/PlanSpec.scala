@@ -35,6 +35,44 @@ class PlanSpec extends AnyFunSuite {
     assert(who.count() > 0)
   }
 
+  test("every sorted KgApi call plans one shuffle; triples calls run one per-document map") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.kg.{KgApi, KgQueries}
+    val walk = new AdaptiveSparkPlanHelper {}
+    val triples = KgQueries.sharedTriples(spark)
+    val closure = KgQueries.sharedClosure(spark)
+    val overTriples = Seq(
+      "whoCollect" -> KgApi.whoCollect(triples, "email address"),
+      "extWhoCollect" -> KgApi.extWhoCollect(triples, "phone number", umbrella = true),
+      "edgePurposes" -> KgApi.edgePurposes(triples),
+      "edgeTexts" -> KgApi.edgeTexts(triples),
+      "contradictions" -> KgApi.contradictions(triples))
+    val overClosure = Seq(
+      "whoCollectFromClosure" -> KgApi.whoCollectFromClosure(closure, "email address"),
+      "validateCollectionFromClosure" ->
+        KgApi.validateCollectionFromClosure(closure, KgQueries.ValidateDts),
+      "validateSharingFromClosure" ->
+        KgApi.validateSharingFromClosure(closure, KgQueries.ValidatePairs))
+    def finalPlan(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(p.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan, s"not the final AQE plan:\n$p")
+      p
+    }
+    (overTriples ++ overClosure).foreach { case (name, df) =>
+      val p = finalPlan(df)
+      val shuffles = walk.collect(p) { case e: ShuffleExchangeLike => e }
+      assert(shuffles.size == 1, s"$name plans ${shuffles.size} shuffles:\n$p")
+    }
+    overTriples.foreach { case (name, df) =>
+      val p = df.queryExecution.executedPlan
+      val maps = walk.collect(p) { case m: MapPartitionsExec => m }
+      assert(maps.size == 1, s"$name runs ${maps.size} per-document maps:\n$p")
+    }
+  }
+
   test("filter + projection push into the parquet scan") {
     val df = spark.read.parquet(s"$sf/lineitem.parquet")
       .filter(col("l_quantity") > 30)
