@@ -113,13 +113,13 @@ object BenchExtra {
 
     // ---- alias components ----
     run("alias: edges gen only") {
-      noop(aliasEdgesFrame(spark))
+      noop(kg.KgQueries.aliasGraph(spark))
     }
     run("alias: components (no sort)") {
-      noop(kg.AliasResolution.connectedComponents(aliasEdgesFrame(spark)))
+      noop(kg.AliasResolution.connectedComponents(kg.KgQueries.aliasGraph(spark)))
     }
     run("alias: components + orderBy") {
-      noop(kg.AliasResolution.connectedComponents(aliasEdgesFrame(spark)).orderBy("vertex"))
+      noop(kg.AliasResolution.connectedComponents(kg.KgQueries.aliasGraph(spark)).orderBy("vertex"))
     }
 
     // ---- kg pipeline kernel at scale-digest size ----
@@ -127,27 +127,5 @@ object BenchExtra {
       kg.KgPipeline.run(spark, 24000L, 42L).toDF().write
         .format("noop").mode("overwrite").save()
     }
-  }
-
-  /** Same synthetic graph kg_alias_components builds (kept in sync by eye —
-    * probe-only tool, not a declared query). */
-  private def aliasEdgesFrame(spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val s = spark
-    val giant = s.range(1, 300001)
-      .select(format_string("g%06d", col("id")).as("src"), lit("g000000").as("dst"))
-    val chain = s.range(0, 4095)
-      .select(format_string("h%06d", col("id")).as("src"),
-        format_string("h%06d", col("id") + 1).as("dst"))
-    val stars = s.range(0, 700000).filter(col("id") % 10 =!= 0)
-      .select(format_string("s%06d", col("id")).as("src"),
-        format_string("s%06d", col("id") - col("id") % 10).as("dst"))
-    val lex = {
-      import s.implicits._
-      graft.nlp.Lexicon.entityInfo.toSeq.sortBy(_._1).flatMap { case (canon, (aliases, _)) =>
-        aliases.toSeq.sorted.map(a => (a, s"entity:$canon"))
-      }.toDF("src", "dst")
-    }
-    giant.union(chain).union(stars).union(lex)
   }
 }

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.gen.CorpusGen
@@ -296,72 +296,54 @@ final class StageStore(spark: SparkSession, baseDir: String, runId: String) {
   */
 object AliasResolution {
 
+  /** Cap on distributed propagate + pointer-jump rounds; with jumping a
+    * round doubles the reach, so 25 covers diameters far beyond 10⁶. */
+  private val MaxIter = 25
+
   /** edges: DataFrame(src: String, dst: String) undirected.
     * Returns DataFrame(vertex: String, component: String) where component is
-    * the lexicographic min vertex of the component.
-    *
-    * Iteration hygiene (round-2 ADVICE): the changed-count is folded into
-    * the propagate frame so each round is ONE action (no re-execution of the
-    * join), superseded label frames are unpersisted, and lineage is
-    * truncated with `localCheckpoint` every 3 rounds — without which the
-    * plan tree grows unboundedly and real-corpus alias graphs (10⁸ edges)
-    * blow up driver planning. Converges in O(diameter) shuffle rounds. */
-  def connectedComponents(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25)
-      : org.apache.spark.sql.DataFrame =
-    connectedComponentsDiag(edges, maxIter)._1
+    * the lexicographic min vertex of the component. */
+  def connectedComponents(edges: DataFrame): DataFrame =
+    connectedComponentsDiag(edges)._1
 
-  /** As [[connectedComponents]], also reporting the number of shuffle rounds
-    * taken — pointer jumping makes this ≈ log₂(diameter), the property the
-    * adversarial-scale test pins (it disables the local finish to exercise
-    * the distributed path). */
-  def connectedComponentsWithRounds(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25,
-      localFinishEdges: Long = 500000L): (org.apache.spark.sql.DataFrame, Int) = {
-    val (labels, rounds, _) = connectedComponentsDiag(edges, maxIter, localFinishEdges)
-    (labels, rounds)
-  }
-
-  /** Full diagnostic variant: (labels, rounds, active-frame sizes after each
-    * contraction). PipelineSpec pins the sizes as monotonically shrinking —
-    * the round-3 VERDICT defect was a labels frame that stayed at |V|
-    * forever, so every late round shuffled a million converged labels.
+  /** As [[connectedComponents]], also reporting the distributed rounds taken
+    * (pointer jumping makes this ≈ log₂(diameter)) and the active-vertex
+    * count after each contraction. PipelineSpec pins the sizes as
+    * monotonically shrinking — the round-3 VERDICT defect was a labels frame
+    * that stayed at |V| forever, so every late round shuffled a million
+    * converged labels. `localFinishEdges` (default 500k edges ≈ tens of MB,
+    * a bounded collect) is the driver-finish bound; tests set it to 0 or a
+    * small value to exercise the distributed rounds.
     *
-    * Two-phase structure with LABEL parking:
+    * One loop, one finish:
     *   1. seed: component = min(vertex, min neighbor) in one aggregation;
-    *   2. contract the edge list to component representatives (drop
-    *      self-loops) and PARK every vertex absent from the contracted
-    *      graph. Parking is safe mid-stream because an absent vertex either
-    *      (a) points one hop to a representative that stays active, or
-    *      (b) sits in a label-cluster with no crossing edges — which by
-    *      connectivity is a whole component, fully converged with flat
-    *      labels at its minimum. Star-dominated alias graphs park ~99% of
-    *      |V| at the first contraction, so late rounds shuffle only the
-    *      unresolved core (a long chain's representatives);
-    *   3. once the contracted graph fits `localFinishEdges` (default 500k
-    *      edges ≈ tens of MB — a documented, bounded collect), finish with
-    *      a driver-side union-find: each residual distributed round costs
-    *      ~seconds of scheduling overhead on a frame of thousands of rows,
-    *      while the local pass is milliseconds. Star-dominated web alias
-    *      graphs contract 10⁶ vertices → ~10³ core at the seed step; a
-    *      graph whose quotient stays above the bound keeps iterating
-    *      propagate + pointer-jump distributed, contracting every other
-    *      round, until it fits;
-    *   4. resolve parked layers most-recent-first: each layer needs ONE
-    *      left-outer join against the already-resolved frame (its targets
-    *      are final-active or parked later; same-layer targets are flat
-    *      self-labels covered by the coalesce).
-    */
-  def connectedComponentsDiag(edges: org.apache.spark.sql.DataFrame, maxIter: Int = 25,
-      localFinishEdges: Long = 500000L): (org.apache.spark.sql.DataFrame, Int, Seq[Long]) = {
-    // phase-timing diagnostics for the optimization probe (BenchExtra);
-    // zero output unless -Dgraft.cc.debug=true
-    val debug = java.lang.Boolean.getBoolean("graft.cc.debug") ||
-      sys.env.get("GRAFT_CC_DEBUG").contains("1")
-    var tPhase = System.nanoTime()
-    def phase(label: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"[cc] $label%-28s ${(now - tPhase) / 1e9}%.3f s")
-      tPhase = now
-    }
+    *   2. contract the edges to the quotient by the labels (drop
+    *      self-loops). While the quotient is above `localFinishEdges`, PARK
+    *      every label whose vertex left it, and run propagate + pointer-jump
+    *      rounds over the survivors, contracting again after every other
+    *      round that changed a label;
+    *   3. finish: if the quotient fits the bound, union-find it on the
+    *      driver and broadcast-join the root map onto the active labels on
+    *      `component` (an empty quotient needs no join); otherwise the
+    *      rounds converged and the labels are final. Then resolve the parked
+    *      layers most-recent-first: each needs ONE left-outer join against
+    *      the already-resolved frame (its targets are final-active or parked
+    *      later; same-layer targets are flat self-labels, kept by the
+    *      coalesce), and materialize once.
+    *
+    * Invariant: every label is a vertex of its own component, and each
+    * component's minimum labels itself. Seeding, propagation and jumping
+    * all keep it. Under it, for the cluster of vertices sharing a label c:
+    *   - if the cluster has a crossing edge, c is a quotient vertex, so the
+    *     union-find root of c is the component minimum;
+    *   - if it has none, the cluster is the whole component (components
+    *     are connected), so c already is that minimum.
+    * That is why one finish is right at any contraction, why a parked
+    * label's target either stays active or is final, and why parking is
+    * safe mid-stream. Star-dominated alias graphs contract 10⁶ vertices to
+    * ~10³ at the first contraction and finish there with no round. */
+  def connectedComponentsDiag(edges: DataFrame,
+      localFinishEdges: Long = 500000L): (DataFrame, Int, Seq[Long]) = {
     // no distinct here: duplicate edges are harmless to min-aggregation and
     // the first contraction dedupes anyway — a full 2|E| shuffle saved.
     // `und` holds one row per edge; the symmetric view is derived lazily so
@@ -374,17 +356,17 @@ object AliasResolution {
         least(col("src"), col("nbrMin")).as("component"),
         lit(0L).as("chg"))
       .localCheckpoint(true)
-    phase("seed labels")
-    var parkedLayers = List.empty[org.apache.spark.sql.DataFrame]
-    var checkpoints = List.empty[org.apache.spark.sql.DataFrame]
+    var parkedLayers = List.empty[DataFrame]
+    var checkpoints = List.empty[DataFrame]
     var activeSizes = Vector.empty[Long]
     var activeEdges = -1L
 
     // quotient the edges by the current labels; counts FIRST so the bounded
-    // regimes below are known before any |V|-sized work happens (guide §3.1
-    // — size estimates on checkpointed frames are unknown, so the planner
-    // cannot pick broadcast strategies on its own)
-    def contract(): Unit = {
+    // regime is known before any |V|-sized work happens (guide §3.1 — size
+    // estimates on checkpointed frames are unknown, so the planner cannot
+    // pick broadcast strategies on its own). Above the bound, park vertices
+    // that left the quotient and shrink the labels to the survivors.
+    def contractAndPark(): Unit = {
       val l1 = labels.select(col("vertex").as("v1"), col("component").as("c1"))
       val l2 = labels.select(col("vertex").as("v2"), col("component").as("c2"))
       val contracted = und.join(l1, und("src") === col("v1"))
@@ -396,123 +378,28 @@ object AliasResolution {
       und = contracted
       checkpoints ::= contracted
       activeEdges = contracted.count()
-      phase("contract: quotient join")
-    }
-
-    // park vertices that left the contracted graph, shrink the active
-    // labels frame to the survivors
-    def park(): Unit = {
-      val activeV0 = und.select(col("src").as("vertex"))
-        .union(und.select(col("dst").as("vertex"))).distinct()
-      // when the quotient is inside the bounded local-finish regime the
-      // active-vertex set is provably tiny (≤ 2·|quotient|): broadcast the
-      // membership join instead of shuffling the full |V| labels frame
-      val activeV = if (activeEdges <= localFinishEdges) broadcast(activeV0) else activeV0
-      // one materialization of the flag join; parked/kept are cheap filters
-      val flagged = labels.join(activeV.withColumn("_a", lit(1)), Seq("vertex"), "left_outer")
-        .localCheckpoint(true)
-      phase("contract: flag join")
-      checkpoints ::= flagged
-      val parked = flagged.filter(col("_a").isNull)
-        .select(col("vertex"), col("component"))
-      val kept = flagged.filter(col("_a").isNotNull)
-        .select(col("vertex"), col("component"), col("chg"))
-      labels.unpersist()
-      if (!parked.isEmpty) parkedLayers ::= parked
-      labels = kept
-      activeSizes :+= kept.count()
-      phase("contract: park/keep counts")
-    }
-
-    def contractAndPark(): Unit = { contract(); park() }
-
-    /** Driver union-find over the current (bounded) quotient edge list:
-      * (root map, distinct quotient vertices in first-seen order). */
-    def quotientUnionFind(): (scala.collection.mutable.HashMap[String, String], Vector[String]) = {
-      val rows = und.select(col("src"), col("dst")).collect()
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      rows.foreach { e =>
-        val (ra, rb) = (find(e.getString(0)), find(e.getString(1)))
-        // union by min keeps every root at its component minimum
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val verts = rows.iterator
-        .flatMap(e => Iterator(e.getString(0), e.getString(1))).distinct.toVector
-      val roots = scala.collection.mutable.HashMap.empty[String, String]
-      verts.foreach(v => roots(v) = find(v))
-      (roots, verts)
-    }
-
-    // driver-side union-find over the (bounded) residual quotient graph;
-    // replaces labels with the final active labels and ends the iteration
-    def finishLocally(): Boolean = {
-      if (activeEdges == 0L || activeEdges > localFinishEdges) false
-      else {
-        val (roots, verts) = quotientUnionFind()
-        val sp = edges.sparkSession
-        import sp.implicits._
+      if (activeEdges > localFinishEdges) {
+        val activeV = und.select(col("src").as("vertex"))
+          .union(und.select(col("dst").as("vertex"))).distinct()
+        // one materialization of the flag join; parked/kept are cheap filters
+        val flagged = labels.join(activeV.withColumn("_a", lit(1)), Seq("vertex"), "left_outer")
+          .localCheckpoint(true)
+        checkpoints ::= flagged
+        val parked = flagged.filter(col("_a").isNull)
+          .select(col("vertex"), col("component"))
+        val kept = flagged.filter(col("_a").isNotNull)
+          .select(col("vertex"), col("component"), col("chg"))
         labels.unpersist()
-        labels = verts.map(v => (v, roots(v))).toDF("vertex", "component")
-        true
+        if (!parked.isEmpty) parkedLayers ::= parked
+        labels = kept
+        activeSizes :+= kept.count()
       }
     }
 
-    // star graphs converge at seed time: contract immediately so the
-    // iterate phase never touches their labels or edges at all
-    contract()
-
-    // Round-7 fast finish at the FIRST contraction (guide §2.4 — remove
-    // whole passes): when the seed quotient is empty or already inside the
-    // bounded local-finish regime, the flag-join / parking / kept-count /
-    // layer-resolution machinery (three full |V|-row passes plus a |V|-row
-    // checkpoint) collapses into at most ONE broadcast map-join over the
-    // seed labels. Correctness: any vertex's seed label c = least(v,
-    // minNbr(v)) is itself a vertex one hop away, so either cluster-c has
-    // a crossing edge (then c is a quotient node and the edge (v, c) makes
-    // find(c) = find(v)), or cluster-c has none (then the component IS
-    // cluster-c, flat at its minimum c) — the same invariant the parking
-    // path relies on, applied to every vertex at once. The general
-    // distributed path below is untouched for quotients above the bound
-    // (and for localFinishEdges = 0, which the adversarial tests use).
-    if (activeEdges == 0L) {
-      activeSizes :+= 0L
-      val out = labels.select(col("vertex"), col("component")).localCheckpoint(true)
-      phase("fast finish (seed-converged)")
-      checkpoints.foreach(_.unpersist())
-      labels.unpersist()
-      und.unpersist()
-      return (out, 0, activeSizes)
-    }
-    if (activeEdges <= localFinishEdges) {
-      val (roots, verts) = quotientUnionFind()
-      activeSizes :+= verts.size.toLong
-      val sp = edges.sparkSession
-      import sp.implicits._
-      val m = verts.map(v => (v, roots(v))).toDF("rv", "rc")
-      val resolvedAll = labels
-        .join(broadcast(m), labels("component") === col("rv"), "left_outer")
-        .select(labels("vertex"),
-          coalesce(col("rc"), labels("component")).as("component"))
-      val out = resolvedAll.localCheckpoint(true)
-      phase("fast finish (bounded quotient)")
-      checkpoints.foreach(_.unpersist())
-      labels.unpersist()
-      und.unpersist()
-      return (out, 0, activeSizes)
-    }
-    park()
-
-    var changed = if (activeSizes.last == 0L || finishLocally()) 0L else 1L
-    phase("local finish")
+    contractAndPark()
+    var changed = 1L
     var i = 0
-    while (changed > 0 && i < maxIter) {
+    while (activeEdges > localFinishEdges && changed > 0 && i < MaxIter) {
       val prev = labels
       val s = sym
       val next = s.join(labels, s("dst") === labels("vertex"))
@@ -542,19 +429,26 @@ object AliasResolution {
         case r => r.getLong(0)
       }
       prev.unpersist()
-      if (changed > 0 && i % 2 == 1) {
-        contractAndPark()
-        if (finishLocally()) changed = 0
-      }
+      if (changed > 0 && i % 2 == 1) contractAndPark()
       i += 1
-      phase(s"iterate round $i")
     }
-    und.unpersist()
 
-    // resolution: fold parked layers, most recently parked first. The join
-    // target `m` at every step holds only vertices that were still ACTIVE
-    // after the first contraction (final labels + layers parked later; the
-    // first-parked layer — the big one on star-shaped graphs — is folded
+    if (activeEdges <= localFinishEdges) {
+      val roots = if (activeEdges == 0L) Vector.empty else quotientRoots(und)
+      activeSizes :+= roots.size.toLong
+      if (roots.nonEmpty) {
+        val sp = edges.sparkSession
+        import sp.implicits._
+        val m = roots.toDF("rv", "rc")
+        checkpoints ::= labels
+        labels = labels.join(broadcast(m), labels("component") === col("rv"), "left_outer")
+          .select(labels("vertex"), coalesce(col("rc"), labels("component")).as("component"))
+      }
+    }
+
+    // The join target `m` at every fold holds only vertices that were still
+    // ACTIVE after the first contraction (final labels + layers parked later;
+    // the first-parked layer — the big one on star-shaped graphs — is folded
     // LAST, so its output never feeds a later join target). Hence
     // activeSizes.head bounds |m|, and when that bound is small the layer
     // join broadcasts `m` instead of shuffling+sorting the parked frame
@@ -572,9 +466,29 @@ object AliasResolution {
     // materialize once, then free every intermediate checkpoint — repeated
     // in-session runs (bench medians) must not accumulate block-manager state
     val out = resolved.localCheckpoint(true)
-    phase("resolve parked + materialize")
     checkpoints.foreach(_.unpersist())
     labels.unpersist()
     (out, i, activeSizes)
+  }
+
+  /** Driver union-find over a (bounded) quotient edge list: (vertex, root)
+    * for each distinct quotient vertex, in first-seen order. */
+  private def quotientRoots(und: DataFrame): Vector[(String, String)] = {
+    val rows = und.select(col("src"), col("dst")).collect()
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    rows.foreach { e =>
+      val (ra, rb) = (find(e.getString(0)), find(e.getString(1)))
+      // union by min keeps every root at its component minimum
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    rows.iterator.flatMap(e => Iterator(e.getString(0), e.getString(1))).distinct
+      .map(v => (v, find(v))).toVector
   }
 }

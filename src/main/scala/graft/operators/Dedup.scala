@@ -14,6 +14,11 @@ import org.apache.spark.sql.expressions.Window
   * buckets (boilerplate docs) are handled by AQE skew-join splitting.
   * Verification of candidates recomputes exact similarity only for bucket
   * pairs (a tiny fraction).
+  *
+  * Null contract: a document with a null `text` gets no row from
+  * [[minhashBands]], [[simhash]] or [[verifyJaccard]], so it never pairs
+  * (SQL null equals nothing).
+  * A null `embedding` gets key 0 in every band of [[embeddingBandKeys]].
   */
 object Dedup {
 
@@ -79,7 +84,7 @@ object Dedup {
     val banded = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         val sig = new Array[Long](nh)
-        it.map { case (id, text) =>
+        it.filter(_._2 != null).map { case (id, text) =>
           java.util.Arrays.fill(sig, Long.MaxValue)
           val shs = shingleStrings(text, 3)
           var s = 0
@@ -168,7 +173,7 @@ object Dedup {
     import spark.implicits._
     val sh = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
-        it.map { case (id, text) =>
+        it.filter(_._2 != null).map { case (id, text) =>
           val seen = new java.util.LinkedHashSet[String]()
           val shs = shingleStrings(text, 3)
           var i = 0
@@ -206,7 +211,7 @@ object Dedup {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         val counts = new Array[Int](60)
-        it.flatMap { case (id, text) =>
+        it.filter(_._2 != null).flatMap { case (id, text) =>
           java.util.Arrays.fill(counts, 0)
           val words = text.split(" ", -1)
           var nWords = 0
@@ -304,12 +309,12 @@ object Dedup {
     emb.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
       .mapPartitions { it =>
         it.flatMap { case (id, e) =>
-          val arr = e.toArray
+          val arr = if (e == null) null else e.toArray
           (0 until nb).iterator.map { b =>
             var k = 0L
-            // a row whose embedding is not exactly `dim` wide got a null
-            // dot (zip_with null-padding) → every `when` fell through → 0
-            if (arr.length == dim) {
+            // a row whose embedding is null or not exactly `dim` wide got a
+            // null dot (zip_with null-padding) → every `when` fell through → 0
+            if (arr != null && arr.length == dim) {
               var j = 0
               while (j < ppb) {
                 val plane = planes(b * ppb + j)

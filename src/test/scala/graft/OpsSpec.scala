@@ -112,6 +112,25 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("null text emits no dedup rows; a null embedding gets key 0 in every band") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val text = docs.filter(col("doc_id") < 20).select("doc_id", "text")
+    val textNull = text.union(Seq((-1L, null: String)).toDF("doc_id", "text"))
+    assert(rows(Dedup.minhashBands(textNull)) == rows(Dedup.minhashBands(text)))
+    assert(rows(Dedup.simhash(textNull)) == rows(Dedup.simhash(text)))
+    val pairs = Seq((-1L, 0L), (0L, 1L)).toDF("a", "b")
+    val jaccard = rows(Dedup.verifyJaccard(pairs, text, 0.0))
+    assert(jaccard.size == 1)
+    assert(rows(Dedup.verifyJaccard(pairs, textNull, 0.0)) == jaccard)
+    val vecs = emb.filter(col("vec_id") < 20).select("vec_id", "embedding")
+    val vecsNull = vecs.union(Seq((-1L, null: Seq[Float])).toDF("vec_id", "embedding"))
+    val keys = Dedup.embeddingBandKeys(vecsNull, bands = 8, planesPerBand = 16)
+    assert(rows(keys.filter(col("vec_id") === -1L)) == (0 until 8).map(b => Seq(-1L, b, 0L)).toSet)
+    assert(rows(keys.filter(col("vec_id") =!= -1L)) ==
+      rows(Dedup.embeddingBandKeys(vecs, bands = 8, planesPerBand = 16)))
+  }
+
   test("exact dedup keeps one winner per distinct text") {
     val n = docs.count()
     val u = docs.select(col("text")).distinct().count()

@@ -83,23 +83,51 @@ class PipelineSpec extends AnyFunSuite {
     assert(KgPipeline.saltedRepartition(hot, 8, saltBuckets = 8).count() == 400)
   }
 
+  /** Driver union-find over the collected edges: the reference labelling. */
+  private def unionFind(edges: org.apache.spark.sql.DataFrame): Map[String, String] = {
+    val es = edges.collect().map(r => (r.getString(0), r.getString(1)))
+    val parent = scala.collection.mutable.Map[String, String]()
+    def find(x: String): String = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    es.flatMap(e => Seq(e._1, e._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
+  /** Runs CC at driver-finish bound 0 (distributed rounds only) and 40 (the
+    * in-loop finish takes over once a later quotient fits), checks every
+    * label against [[unionFind]], and returns (rounds, active sizes) per bound. */
+  private def ccAtBounds(edges: org.apache.spark.sql.DataFrame): Seq[(Int, Seq[Long])] = {
+    val truth = unionFind(edges)
+    Seq(0L, 40L).map { bound =>
+      val (labels, rounds, sizes) = graft.kg.AliasResolution.connectedComponentsDiag(
+        edges, localFinishEdges = bound)
+      val got = labels.collect().map(r => r.getString(0) -> r.getString(1))
+      val wrong = got.count { case (v, c) => !truth.get(v).contains(c) }
+      assert(got.length == truth.size && got.toMap.size == truth.size,
+        s"bound $bound: duplicate or missing vertices")
+      assert(wrong == 0, s"bound $bound: $wrong labels differ from union-find")
+      assert(sizes == sizes.sorted.reverse, s"bound $bound: active frame grew: $sizes")
+      (rounds, sizes)
+    }
+  }
+
   test("pointer jumping keeps rounds logarithmic in the component diameter") {
-    import spark.implicits._
     // 1024-node chain: propagation alone needs ~1024 rounds; with pointer
     // jumping the reach doubles per round → ≤ log2(1023) + 2 = 12
     val chain = spark.range(0, 1023)
       .select(format_string("c%04d", col("id")).as("src"),
         format_string("c%04d", col("id") + 1).as("dst"))
-    // localFinishEdges=0 disables the driver union-find so the distributed
-    // propagate/jump path is what's measured
-    val (labels, rounds) = graft.kg.AliasResolution.connectedComponentsWithRounds(
-      chain, localFinishEdges = 0L)
-    assert(labels.select("component").distinct().count() == 1)
-    assert(rounds <= 12, s"rounds=$rounds for diameter 1023")
+    val Seq((rounds0, _), (rounds40, _)) = ccAtBounds(chain)
+    assert(rounds0 <= 12, s"rounds=$rounds0 for diameter 1023")
+    assert(rounds40 < rounds0, s"in-loop finish not reached: $rounds40 vs $rounds0 rounds")
   }
 
   test("label parking: active frame shrinks monotonically and stars park at seed") {
-    import spark.implicits._
     // 10k-spoke star + 64-node chain: the star must park at the first
     // contraction, so the iterate phase only ever shuffles the chain core
     val star = spark.range(1, 10001)
@@ -107,17 +135,19 @@ class PipelineSpec extends AnyFunSuite {
     val chain = spark.range(0, 63)
       .select(format_string("h%05d", col("id")).as("src"),
         format_string("h%05d", col("id") + 1).as("dst"))
-    val (labels, _, sizes) = graft.kg.AliasResolution.connectedComponentsDiag(
-      star.union(chain), localFinishEdges = 0L)
-    assert(sizes.nonEmpty)
-    assert(sizes.head < 200,
-      s"star vertices must park at the seed contraction; active size ${sizes.head}")
-    assert(sizes == sizes.sorted.reverse, s"active frame grew: $sizes")
-    // parked labels still resolve to the true component minima
-    val comps = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(comps.size == 10065)
-    assert(comps("g09999") == "g00000" && comps("g00000") == "g00000")
-    assert(comps("h00063") == "h00000" && comps("h00031") == "h00000")
+    val Seq((rounds0, sizes0), (rounds40, _)) = ccAtBounds(star.union(chain))
+    assert(sizes0.head < 200,
+      s"star vertices must park at the seed contraction; active size ${sizes0.head}")
+    assert(rounds40 < rounds0, s"in-loop finish not reached: $rounds40 vs $rounds0 rounds")
+  }
+
+  test("small stars converge at the seed: empty first quotient, no rounds") {
+    val stars = spark.range(0, 300).filter(col("id") % 10 =!= 0)
+      .select(format_string("s%04d", col("id")).as("src"),
+        format_string("s%04d", col("id") - col("id") % 10).as("dst"))
+    ccAtBounds(stars).foreach { case (rounds, sizes) =>
+      assert(rounds == 0 && sizes == Seq(0L), s"rounds=$rounds sizes=$sizes")
+    }
   }
 
   test("alias components merge aliases of the same entity") {
